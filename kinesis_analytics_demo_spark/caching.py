@@ -34,14 +34,6 @@ def tracked_persist(
     return out
 
 
-def track(df: DataFrame) -> DataFrame:
-    """Register an ALREADY-persisted DataFrame for bulk release (for
-    code that manages its own persist lifecycle mid-computation but
-    hands the final persisted result to the caller)."""
-    _TRACKED.append(df)
-    return df
-
-
 def release_tracked(blocking: bool = False) -> int:
     """Unpersist every tracked DataFrame; returns how many were freed.
 

@@ -19,9 +19,7 @@ Five dedup families, all pure DataFrame expressions (no Python UDFs):
 - n-gram Jaccard — the exact verify stage exposed as its own operator.
 - embedding      — cosine near-dup pairs: exact blocked baseline, the
                    IVF-bucketed sub-quadratic twin, and SemDeDup-style
-                   clusters — split into dedup_embedding.py in round
-                   11 (imported mid-module below, preserving
-                   registration order).
+                   clusters — in dedup_embedding.py.
 
 Cross-engine determinism: every hash/arithmetic step has a DuckDB
 twin in functions/hashing.py; jaccard/cosine are single f64 divisions
@@ -577,18 +575,9 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------------------- embedding near-dups
 # The embedding near-dup family (exact blocked all-pairs, the
 # IVF-bucketed sub-quadratic twin, SemDeDup-style clusters) lives in
-# dedup_embedding.py — the round-11 split that keeps this file under
-# the 1,300-line cap. The import sits MID-MODULE, at the family's
-# original position, so fresh-process registration order is byte-for-
-# byte unchanged (dedup is transitively imported early, so a position
-# in registry._load_all_modules could not guarantee that).
-#
-# The bucketed family's CONSTANTS and shared oracle CTE builder stay
-# HERE, above the import, so both import orders resolve: the hybrid
-# query below embeds the CTE at ITS registration (dedup import time),
-# and dedup_embedding pulls these names back whichever module loads
-# first (this file accesses no dedup_embedding attribute at import
-# time — that would break under a dedup_embedding-first import).
+# dedup_embedding.py. The bucketed family's constants and shared oracle
+# CTE builder stay HERE: the hybrid query below embeds the CTE, and
+# dedup_embedding imports them back.
 NEAR_DUP_NPROBE = 2
 #: target max probed-list size. The 10 per-label centroids alone put
 #: ALL corpus growth into list size — the round-8 100x probe crashed
@@ -652,9 +641,6 @@ def _sql_bucketed_pair_ctes(prefix: str = "") -> str:
         WHERE {V.sql_cosine('ea.embedding', 'eb.embedding', 64)}
               >= {EMBEDDING_NEAR_DUP_COSINE}
     )"""
-
-
-from kinesis_analytics_demo_spark.operators import dedup_embedding  # noqa: E402,F401
 
 
 # -------------------------------------------------- incremental dedup
@@ -832,6 +818,8 @@ def dedup_keep_best_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_hybrid_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
+
+    from kinesis_analytics_demo_spark.operators import dedup_embedding
 
     docs = _t(spark, sf_dir, "documents")
     lex = minhash_dup_pairs(docs, JACCARD_THRESHOLD).select(

@@ -2,8 +2,7 @@
 out of ``dedup.py`` (round 11; that file sat at 1,288 lines against
 the 1,300-line cap, and this family is its one self-contained block).
 
-Three operators, registration order preserved by a MID-MODULE import
-from ``dedup.py`` at the family's original position:
+Three operators:
 
 - ``dedup_embedding_cosine``          — exact all-pairs baseline via a
   BLOCKED similarity join (block-pair tasks, vectorized Arrow/numpy
@@ -17,16 +16,6 @@ from ``dedup.py`` at the family's original position:
 Reference parity: the reference engine has no embedding dedup — this
 family is part of the driver-mandated LLM-data-pipeline extension
 surface (SemDeDup, Abbas et al. 2023, as the published recipe).
-
-Import-cycle contract: this module is imported BY ``dedup.py``
-mid-module and imports ``dedup``'s early names back (constants, the
-shared oracle CTE builder, ``label_propagation`` — all defined above
-the import site). Importing this module FIRST also works: its
-``from dedup import ...`` runs dedup's whole body (whose mid-module
-``import dedup_embedding`` is then a no-op binding of this
-partially-initialized module — dedup accesses no attributes of it at
-import time), after which these names resolve against the completed
-``dedup``.
 """
 
 from __future__ import annotations
@@ -39,8 +28,6 @@ from kinesis_analytics_demo_spark.functions import vectors as V
 from kinesis_analytics_demo_spark.plans.registry import register
 from kinesis_analytics_demo_spark.session import read_table as _t
 
-# Defined in dedup.py ABOVE its mid-module import of this file — see
-# the import-cycle contract in the module docstring.
 from kinesis_analytics_demo_spark.operators.dedup import (
     DEDUP_SEL_GRID,
     EMBEDDING_NEAR_DUP_COSINE,

@@ -100,22 +100,15 @@ def _reps(spark: SparkSession, sf_dir: str, persist: bool = True) -> DataFrame:
     return tracked_persist(cw.repartition(1))
 
 
-def _codebook(
-    spark: SparkSession,
-    sf_dir: str,
-    persist: bool = True,
-    reps: DataFrame | None = None,
-) -> DataFrame:
+def _codebook(spark: SparkSession, reps: DataFrame) -> DataFrame:
     """(subspace, code, cw) — one deterministic codeword per label per
     subspace; cw keeps the representative's FULL vector and distances
     index into the subspace's absolute range, so no slicing copies.
 
-    Pass ``reps`` (from :func:`_reps`) when the operator also uses the
-    reps frame elsewhere, so the persist happens exactly once per
-    operator instead of relying on CacheManager plan-dedup across
-    logically-equal rebuilds (ADVICE r11)."""
-    if reps is None:
-        reps = _reps(spark, sf_dir, persist=persist)
+    ``reps`` comes from :func:`_reps`, which alone decides whether it is
+    persisted; an operator that also uses the reps frame elsewhere
+    passes the same frame, so the persist happens exactly once
+    (ADVICE r11)."""
     cw = reps.select(
         F.col("label").alias("code"), F.col("embedding").alias("cw")
     )
@@ -125,12 +118,7 @@ def _codebook(
     return cw.crossJoin(subspaces).select("subspace", "code", "cw")
 
 
-def _codes(
-    spark: SparkSession,
-    sf_dir: str,
-    persist: bool = True,
-    cb: DataFrame | None = None,
-) -> DataFrame:
+def _codes(spark: SparkSession, sf_dir: str, cb: DataFrame) -> DataFrame:
     """(vec_id, subspace, code): nearest codeword per subspace,
     tiebroken by code id — the PQ encoding.
 
@@ -141,12 +129,9 @@ def _codes(
     row_number formulation shuffled and sorted the full N x (codes)
     cross product (N x 640 rows here; corpus x codebook at scale).
 
-    Pass ``cb`` (from :func:`_codebook`) when the operator also uses
-    the codebook elsewhere — one reps persist per operator, not one
-    per helper call (ADVICE r11)."""
+    ``cb`` comes from :func:`_codebook`; an operator that also uses the
+    codebook elsewhere passes the same frame (ADVICE r11)."""
     emb = _t(spark, sf_dir, "embeddings")
-    if cb is None:
-        cb = _codebook(spark, sf_dir, persist=persist)
     d = _subdist(F.col("embedding"), F.col("cw"), F.col("subspace"))
     return (
         emb.crossJoin(F.broadcast(cb))
@@ -186,7 +171,8 @@ _SQL_CODES = f"""
 def embedding_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist=False: this query references the codebook lineage exactly
     # once, so the reps cache would be a pure materialization barrier.
-    return _codes(spark, sf_dir, persist=False).select(
+    cb = _codebook(spark, _reps(spark, sf_dir, persist=False))
+    return _codes(spark, sf_dir, cb).select(
         "vec_id",
         F.col("subspace").cast("int").alias("subspace"),
         F.col("code").cast("int").alias("code"),
@@ -218,8 +204,8 @@ def embedding_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def embedding_pq_quantization_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
-    cb = _codebook(spark, sf_dir)
-    codes = _codes(spark, sf_dir, cb=cb)
+    cb = _codebook(spark, _reps(spark, sf_dir))
+    codes = _codes(spark, sf_dir, cb)
     d = _subdist(F.col("embedding"), F.col("cw"), F.col("subspace"))
     err = (
         codes.join(emb, "vec_id")
@@ -273,8 +259,8 @@ def embedding_pq_quantization_error(spark: SparkSession, sf_dir: str) -> DataFra
 )
 def similarity_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
-    cb = _codebook(spark, sf_dir)
-    codes = _codes(spark, sf_dir, cb=cb)
+    cb = _codebook(spark, _reps(spark, sf_dir))
+    codes = _codes(spark, sf_dir, cb)
     q = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
     )
@@ -366,8 +352,8 @@ SHORTLIST = 100  #: ADC candidates kept per query for exact re-rank
 )
 def similarity_pq_adc_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
-    cb = _codebook(spark, sf_dir)
-    codes = _codes(spark, sf_dir, cb=cb)
+    cb = _codebook(spark, _reps(spark, sf_dir))
+    codes = _codes(spark, sf_dir, cb)
     q = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
     )
@@ -519,8 +505,8 @@ def similarity_ivfpq_adc_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # independent _reps calls each stacked a tracked_persist handle and
     # leaned on CacheManager plan-dedup to share the cache).
     reps = _reps(spark, sf_dir)
-    cb = _codebook(spark, sf_dir, reps=reps)
-    codes = _codes(spark, sf_dir, cb=cb)
+    cb = _codebook(spark, reps)
+    codes = _codes(spark, sf_dir, cb)
     # The coarse-quantizer centroids are the SAME label representatives
     # the codebook is built from.
     cent = reps.select("cid", F.col("embedding").alias("cv"))

@@ -54,13 +54,22 @@ BM25_K1 = 1.2
 BM25_B = 0.75
 #: Fixed query — the sum below adds the per-term scores in THIS order.
 BM25_QUERY_TERMS = ("hash", "merge", "scan", "window")
-# _fused_query_stats pivots one tf{i}/df{i} column per term INDEX, so a
-# duplicate term would double-count both rankers' scores and inflate
-# rel in retrieval_ndcg_audit (ADVICE r11) — refuse at import.
-assert len(set(BM25_QUERY_TERMS)) == len(BM25_QUERY_TERMS), (
-    "BM25_QUERY_TERMS must be duplicate-free: the fused pivoted stats "
-    "count each term once per index"
-)
+
+
+def check_distinct_terms(terms: tuple[str, ...]) -> None:
+    """Raise ValueError if any query term repeats.
+
+    _fused_query_stats pivots one tf{i}/df{i} column per term INDEX, so a
+    duplicate term would double-count both rankers' scores and inflate
+    rel in retrieval_ndcg_audit (ADVICE r11)."""
+    if len(set(terms)) != len(terms):
+        raise ValueError(
+            f"query terms must be duplicate-free: {terms!r} (the fused "
+            "pivoted stats count each term once per index)"
+        )
+
+
+check_distinct_terms(BM25_QUERY_TERMS)
 BM25_TOP_K = 20
 
 #: df bounds are FRACTIONS of corpus size so the operator keeps the

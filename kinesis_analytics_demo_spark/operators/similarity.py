@@ -942,6 +942,4 @@ def similarity_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Diversified retrieval, the IVF list-balance audit, and the MNN
 # family (exact + bucketed scale twin) moved to ``similarity2.py`` in
-# round 9 (module size cap). ``registry._load_all_modules`` imports
-# that module immediately after this one, preserving the pre-split
-# registration order exactly.
+# round 9 (module size cap).

@@ -3,11 +3,6 @@ nearest neighbors (split from ``similarity.py`` in round 9 — the file
 had outgrown the repo's 1,300-line module cap; same surgery
 ``temporal.py``/``timeseries.py`` got in round 7).
 
-Registration order is load-bearing only for the first 50 registry
-entries (the driver's sample); this module is imported immediately
-after ``similarity`` in ``registry._load_all_modules``, so the global
-registration order is IDENTICAL to the pre-split single file.
-
 Sections:
 - diversified retrieval: per-label quota top-k and MMR re-ranking
   (Carbonell & Goldstein 1998) as JVM higher-order-function folds;

@@ -688,6 +688,5 @@ def streaming_enrich_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # The streaming-replay battery tail (left/cumulate/full-outer/quantile/
 # session-timeout replays, sketch replays, attribution/dedup replays,
-# cumulate_window_revenue) lives in reference_queries2.py — round-11
-# split; registry._load_all_modules imports it immediately after this
-# module, preserving registration order.
+# cumulate_window_revenue) lives in reference_queries2.py (round-11
+# split).

@@ -4,20 +4,12 @@ against the repo's 1,300-line module cap; same surgery as
 similarity.py -> similarity2.py in round 9 and dedup.py ->
 dedup_embedding.py earlier this round).
 
-Contents (verbatim from the original tail, registration order
-preserved): the left/cumulate/full-outer/quantile/session-timeout
-join-and-window replays, the KMV/CMS/HLL-rolling/space-saving sketch
-replays, the attribution and dedup replays, and the batch
-``cumulate_window_revenue`` twin that anchors the cumulate replay's
-oracle.
-
-Registration-order contract: ``registry._load_all_modules`` imports
-this module IMMEDIATELY after ``reference_queries`` (which nothing
-imports transitively at module scope — verified round 11), so the
-fresh-process registration order is byte-identical to the pre-split
-single file. This module imports ``_replay_events_stream`` back from
-``reference_queries``; there is no cycle (reference_queries does not
-import this module).
+Contents (verbatim from the original tail): the left/cumulate/
+full-outer/quantile/session-timeout join-and-window replays, the
+KMV/CMS/HLL-rolling/space-saving sketch replays, the attribution and
+dedup replays, and the batch ``cumulate_window_revenue`` twin that
+anchors the cumulate replay's oracle. This module imports
+``_replay_events_stream`` back from ``reference_queries``.
 """
 
 from __future__ import annotations
@@ -26,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kinesis_analytics_demo_spark.functions import hashing as _H
+from kinesis_analytics_demo_spark.operators.analytics import ATTRIBUTION_ORACLE
 from kinesis_analytics_demo_spark.plans.reference_queries import (
     _replay_events_stream,
 )
@@ -570,7 +563,9 @@ def streaming_cms_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "streaming_attribution_replay",
-    oracle=None,  # set at import below to the shared batch oracle
+    # the streaming stateful operator must equal the batch window query
+    # bit-for-bit, so it shares that query's oracle
+    oracle=ATTRIBUTION_ORACLE,
     doc="Last-touch attribution on the STREAMING path (the sixteenth "
     "value-checked streaming oracle row): the events table replayed "
     "as a file micro-batch stream through the custom stateful "
@@ -590,25 +585,6 @@ def streaming_attribution_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _replay_events_stream(
         spark, sf_dir, "attr", build, output_mode="append"
     )
-
-
-# share the batch oracle: the streaming stateful operator must equal
-# the batch window query bit-for-bit
-def _bind_attribution_oracle() -> None:
-    import dataclasses
-
-    from kinesis_analytics_demo_spark.operators.analytics import (
-        ATTRIBUTION_ORACLE,
-    )
-    from kinesis_analytics_demo_spark.plans import registry as _reg
-
-    spec = _reg._REGISTRY["streaming_attribution_replay"]
-    _reg._REGISTRY["streaming_attribution_replay"] = dataclasses.replace(
-        spec, oracle=ATTRIBUTION_ORACLE
-    )
-
-
-_bind_attribution_oracle()
 
 
 @register(

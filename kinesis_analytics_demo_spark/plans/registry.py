@@ -15,11 +15,22 @@ DECIMAL on both sides and rounded before casting back to DOUBLE, so
 results are bit-identical regardless of partitioning / AQE decisions.
 min/max/count/arg_min-style aggregates are order-insensitive and need
 no treatment.
+
+Order: the verify driver checks the first ``SLATE_SIZE`` entries of
+``all_queries()``. That slate is derived, not pasted: the pending
+``CHANGED_CODE`` leads, then the queries whose latest driver row in the
+committed ``CORRECTNESS_r*.json`` files is oldest. Every other query
+follows by name, so import order never shows.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import functools
+import glob
+import json
+import os
+import re
+from collections.abc import Callable, Mapping
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -59,8 +70,6 @@ def _load_all_modules() -> None:
     import kinesis_analytics_demo_spark.operators.curation2  # noqa: F401
     import kinesis_analytics_demo_spark.operators.curation3  # noqa: F401
     import kinesis_analytics_demo_spark.operators.dedup  # noqa: F401
-    # dedup_embedding is imported BY dedup mid-module (the round-11
-    # split), so it is already loaded here; listed for completeness.
     import kinesis_analytics_demo_spark.operators.dedup_embedding  # noqa: F401
     import kinesis_analytics_demo_spark.operators.dedup2  # noqa: F401
     import kinesis_analytics_demo_spark.operators.evaluation  # noqa: F401
@@ -83,10 +92,6 @@ def _load_all_modules() -> None:
     import kinesis_analytics_demo_spark.operators.rollup  # noqa: F401
     import kinesis_analytics_demo_spark.operators.rp  # noqa: F401
     import kinesis_analytics_demo_spark.operators.similarity  # noqa: F401
-    # similarity2 MUST import immediately after similarity: it holds
-    # the tail of the pre-split file (diversified retrieval, balance
-    # audit, MNN family), so this position preserves the exact
-    # pre-split registration order.
     import kinesis_analytics_demo_spark.operators.similarity2  # noqa: F401
     import kinesis_analytics_demo_spark.operators.sketches  # noqa: F401
     import kinesis_analytics_demo_spark.operators.sketches2  # noqa: F401
@@ -105,129 +110,72 @@ def _load_all_modules() -> None:
     import kinesis_analytics_demo_spark.operators.training  # noqa: F401
     import kinesis_analytics_demo_spark.operators.tsearch  # noqa: F401
     import kinesis_analytics_demo_spark.plans.reference_queries  # noqa: F401
-    # reference_queries2 MUST import immediately after
-    # reference_queries: it holds the tail of the round-11 split
-    # (streaming-replay battery part 2), so this position preserves
-    # the exact pre-split registration order.
     import kinesis_analytics_demo_spark.plans.reference_queries2  # noqa: F401
 
 
-# The verify driver samples the FIRST 50 entries of ``queries()`` in
-# dict order (confirmed: CORRECTNESS_r02's rows are exactly the first
-# 50 registered names).  The registry therefore front-loads the queries
-# that most need a driver CORRECTNESS row this round; everything else
-# (double-green dedup/text/relational families from r1+r2) follows in
-# registration order.  Round-3 priority = the 51 queries with no driver
-# row in either round plus the 9 that only r1 checked (VERDICT r2
-# items 1-2), minus the 10 lowest-value relational variants that wait
-# for round 4.
-#
-# ROUND-12 ROTATION (active): changed code gets a fresh driver row,
-# then the oldest recency cohort.  50 slots, exactly the literal paste
-# pre-computed at round-11 close (verified against
-# tools/recency_slate.py with the REAL CORRECTNESS_r11.json, which
-# landed 49/50 — the one non-pass is bpe_train_merges' documented
-# no_oracle row, which counts as recency) =
-#   (a) the 17 queries whose implementing module was SPLIT in r11
-#       after the r11 slate locked (dedup.py -> dedup_embedding.py and
-#       reference_queries.py -> reference_queries2.py): the 14
-#       dedup-family queries without a post-split driver row, plus
-#       streaming_dedup_replay, streaming_hll_rolling_replay,
-#       streaming_spacesaving_replay (split proven value-inert by the
-#       15/15 + 12/12 two-SF driver-sims in README round-11 notes),
-#   (b) the 20 remaining r5-era rows in registration order,
-#   (c) the 13 oldest r6-era rows in registration order.
-# Queries whose code changes during round 12 and that are not already
-# in this slate are prepended as further changed-code leads before the
-# driver runs (the (a)-rule; evictions come off the (c) tail).
-# All 50 get the all-50 vanilla driver-sim pre-flight before the
-# driver runs (sf0.001 AND sf0.01, per the round-6/7 staple).
-_DRIVER_PRIORITY: list[str] = [
-    # -- (a) code moved in the r11 module splits (changed-code leads)
-    "dedup_exact",
-    "dedup_minhash_pairs",
-    "dedup_minhash_keep",
-    "dedup_minhash_clusters",
-    "dedup_minhash_signature",
-    "dedup_simhash_fingerprints",
-    "dedup_simhash_pairs",
-    "dedup_ngram_jaccard",
-    "dedup_embedding_cosine",
-    "dedup_embedding_cosine_bucketed",
-    "dedup_embedding_clusters",
-    "dedup_incremental_minhash",
-    "dedup_keep_best_quality",
-    "dedup_hybrid_clusters",
-    "streaming_dedup_replay",
-    "streaming_hll_rolling_replay",
-    "streaming_spacesaving_replay",
-    # -- (b) the 20 remaining r5-era rows, registration order
-    "file_provenance_audit",
-    "sessionize_dynamic_gap",
-    "variant_props_extraction",
-    "late_lines_by_status",
-    "inverted_index_incremental_merge",
-    "embedding_drift_by_label",
-    "skew_profile_lineitem",
-    "bootstrap_ci_event_values",
-    "ab_test_welch_events",
-    "cusum_changepoint_events",
-    "anomaly_mad_events",
-    "text_token_entropy",
-    "source_token_kl",
-    "corpus_zipf_alpha",
-    "dedup_chunk_exact",
-    "corpus_split_leakage_safe",
-    "temporal_split_embargo",
-    "timeseries_similarity_topk",
-    "streaming_cusum_replay",
-    "streaming_attribution_replay",
-    # -- (c) the 13 oldest r6-era rows, registration order
-    "top_session_paths",
-    "bpe_encode_tokens",
-    "roc_auc_purchase_propensity",
-    "lift_gains_deciles",
-    "survival_km_conversion",
-    "benford_first_digit_values",
-    "reconcile_partition_checksums",
-    "quantile_normalize_sources",
-    "zone_map_pruning_audit",
-    "embedding_pq_quantization_error",
-    "similarity_pq_adc",
-    "profile_lineitem",
-    "large_orders",
-]
+#: Queries whose code changed, each with the round of the change. A
+#: pending entry leads the driver slate, in this order, until a driver
+#: row from a LATER round exists; after that it competes on recency.
+CHANGED_CODE: dict[str, int] = {
+    # pq.py threads one codebook frame through _codes (round 12)
+    "similarity_ivfpq_adc_rerank": 12,
+    "similarity_pq_adc_rerank": 12,
+    "embedding_pq_codes": 12,
+}
+#: The verify driver checks the FIRST this-many ``all_queries()`` entries.
+SLATE_SIZE = 50
+_REPO_ROOT = os.path.dirname(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+)
 
 
-# The ROUND-12 slate above IS the literal paste pre-computed at
-# round-11 close (the 17 changed-code leads + 33-name recency tail);
-# the rotation landed at round-12 open once the real CORRECTNESS_r11
-# confirmed the tool's recency math (49/50 green; the bpe_train_merges
-# no_oracle row still counts as driver recency).
-#
-# Carried watch item (VERDICT r10 item 7):
-# similarity_ivfpq_adc_rerank is r9-recency — when its rotation slot
-# comes up (r15 by the slate math), pair the driver row with one
-# ordered min-of-3.
-#: ROUND-12 STAGING: queries registered during round 11 (none — the
-#: registry is frozen at 302 per VERDICT r8 item 8). NEW queries MUST
-#: be APPENDED here when registered (test_registry enforces that
-#: active + staged + driver-checked covers the whole registry, and
-#: that a prior ``no_oracle`` row does not count as coverage for a
-#: query that now has an oracle).
-_DRIVER_PRIORITY_NEXT: list[str] = []
+def driver_recency(root: str, specs: Mapping[str, QuerySpec]) -> dict[str, int]:
+    """Latest round with a driver row per registered query, read from the
+    ``CORRECTNESS_r<N>.json`` files in ``root``. A ``no_oracle`` (rows-only)
+    row does not count for a query that now has an oracle: its SQL has
+    not earned a hash row yet."""
+    rec: dict[str, int] = {}
+    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
+        rnd = int(re.search(r"_r(\d+)\.json$", path)[1])
+        with open(path) as fh:
+            rows = json.load(fh)
+        for name, row in rows.items():
+            spec = specs.get(name)
+            if spec is None or (
+                row.get("err") == "no_oracle" and spec.oracle is not None
+            ):
+                continue
+            rec[name] = max(rec.get(name, 0), rnd)
+    return rec
+
+
+def driver_slate(
+    specs: Mapping[str, QuerySpec],
+    recency: Mapping[str, int],
+    changed: Mapping[str, int] = CHANGED_CODE,
+) -> list[str]:
+    """The ``SLATE_SIZE`` names the driver should check next: pending
+    changed-code leads first, then the stalest queries (never-checked
+    first, then ascending recency, ties by name)."""
+    missing = [n for n in changed if n not in specs]
+    if missing:  # a rename must never silently waste a driver slot
+        raise KeyError(f"CHANGED_CODE names not registered: {missing}")
+    leads = [n for n, rnd in changed.items() if recency.get(n, 0) <= rnd]
+    tail = sorted(specs.keys() - set(leads), key=lambda n: (recency.get(n, 0), n))
+    return (leads + tail)[:SLATE_SIZE]
+
+
+@functools.cache
+def _slate() -> tuple[str, ...]:
+    return tuple(driver_slate(_REGISTRY, driver_recency(_REPO_ROOT, _REGISTRY)))
 
 
 def all_queries() -> dict[str, QuerySpec]:
+    """Every query: the driver slate first, then the rest by name."""
     _load_all_modules()
-    missing = [n for n in _DRIVER_PRIORITY if n not in _REGISTRY]
-    if missing:  # a rename must never silently waste a driver slot
-        raise KeyError(f"_DRIVER_PRIORITY names not registered: {missing}")
-    ordered = {n: _REGISTRY[n] for n in _DRIVER_PRIORITY}
-    for n, spec in _REGISTRY.items():
-        if n not in ordered:
-            ordered[n] = spec
-    return ordered
+    slate = _slate()
+    rest = sorted(_REGISTRY.keys() - set(slate))
+    return {n: _REGISTRY[n] for n in (*slate, *rest)}
 
 
 def get_query(name: str) -> QuerySpec:

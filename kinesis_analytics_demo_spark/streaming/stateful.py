@@ -293,9 +293,7 @@ def running_candlestick_stateful(
     unbounded-window candlestick (reference family,
     flink/tumbling_window.py:179-198) that built-in append-mode
     aggregation cannot emit mid-stream. One fixed-width state row per
-    key; emits the updated aggregate for every touched key per batch.
-    See streaming/state_v2.py for the transformWithStateInPandas
-    variant (adds TTL) where protobuf is available."""
+    key; emits the updated aggregate for every touched key per batch."""
     return df.groupBy(key_col).applyInPandasWithState(
         _make_ohlc_fn(ts_col, value_col),
         outputStructType=_OHLC_OUTPUT_SCHEMA,

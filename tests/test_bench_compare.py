@@ -126,54 +126,6 @@ def test_knn_crank_dial_contract():
     assert f"crank <= {c2.KNN_CRANK}" in oracle  # oracle mirrors the dial
 
 
-def test_recency_slate_matches_active_rotation():
-    """tools/recency_slate.py codifies the per-round slate math: the
-    ACTIVE _DRIVER_PRIORITY must equal (changed-code leads) + (the
-    stalest cohort in registration order). Pins the r12 composition:
-    17 changed-code leads (the r11 module splits) + the 20 remaining
-    r5-era rows + the 13 oldest r6-era rows.  Queries whose code
-    changes during round 12 join the leads (prepended; evictions come
-    off the recency tail) — extend N_LEADS and the leads list when
-    that happens."""
-    from tools.recency_slate import stalest
-
-    from kinesis_analytics_demo_spark.plans.registry import (
-        _DRIVER_PRIORITY,
-        all_queries,
-    )
-
-    all_queries()  # force module load
-    n_leads = 17
-    leads = _DRIVER_PRIORITY[:n_leads]
-    assert leads == [
-        "dedup_exact",
-        "dedup_minhash_pairs",
-        "dedup_minhash_keep",
-        "dedup_minhash_clusters",
-        "dedup_minhash_signature",
-        "dedup_simhash_fingerprints",
-        "dedup_simhash_pairs",
-        "dedup_ngram_jaccard",
-        "dedup_embedding_cosine",
-        "dedup_embedding_cosine_bucketed",
-        "dedup_embedding_clusters",
-        "dedup_incremental_minhash",
-        "dedup_keep_best_quality",
-        "dedup_hybrid_clusters",
-        "streaming_dedup_replay",
-        "streaming_hll_rolling_replay",
-        "streaming_spacesaving_replay",
-    ]
-    tail = _DRIVER_PRIORITY[n_leads:]
-    n_tail = 50 - n_leads
-    # the stalest 33 EXCLUDING the leads (they sit in the slate only
-    # because their module was split in r11)
-    stale = [
-        n for n, _ in stalest(n_tail + n_leads) if n not in leads
-    ][:n_tail]
-    assert tail == stale
-
-
 def test_tail_queries_reads_solo_bench_capture(tmp_path):
     """A solo `python bench.py > f` capture has the full-detail JSON on
     line 1 (top-level `queries`) and a driver-style top-15 line after
@@ -202,17 +154,16 @@ def test_tail_queries_empty_file_exits_cleanly(tmp_path):
 
 def test_split_modules_import_first_in_fresh_process():
     """Round-11 split contract: the split-out modules must be
-    importable FIRST in a fresh interpreter (dedup_embedding's cycle
-    with dedup resolves because dedup accesses no dedup_embedding
-    attribute at import time; reference_queries2 simply imports its
-    head). A future edit that binds e.g.
-    `dedup_embedding._list_pair_sims` at dedup import time would pass
-    every normal-order test and break only here."""
+    importable FIRST in a fresh interpreter (each imports the names it
+    shares from its head module: dedup_embedding from dedup,
+    reference_queries2 from reference_queries)."""
+    import os
     import subprocess
     import sys
 
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     code = (
-        "import sys; sys.path.insert(0, '/root/repo')\n"
+        f"import sys; sys.path.insert(0, {repo!r})\n"
         "import kinesis_analytics_demo_spark.operators.dedup_embedding as de\n"
         "import kinesis_analytics_demo_spark.operators.dedup as d\n"
         "assert de.NEAR_DUP_NPROBE == d.NEAR_DUP_NPROBE\n"

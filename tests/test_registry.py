@@ -1,32 +1,56 @@
-"""Registry contract: the driver samples the FIRST 50 ``queries()``
-entries in dict order, so the priority ordering is load-bearing —
-pin it."""
+"""Registry contract: the driver checks the FIRST ``SLATE_SIZE``
+``all_queries()`` entries, so that prefix is derived from the committed
+``CORRECTNESS_r*.json`` files and the rest of the order must not depend
+on import order. The slate rules are checked as properties over fake
+correctness files, so a new round's file never makes a test stale."""
 
 from __future__ import annotations
+
+import json
+import os
+import subprocess
+import sys
 
 import pytest
 
 from kinesis_analytics_demo_spark.plans import registry
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _specs(names, oracle="SELECT 1"):
+    return {
+        n: registry.QuerySpec(name=n, fn=lambda spark, sf_dir: None, oracle=oracle)
+        for n in names
+    }
+
+
+def _write_round(root, rnd, rows):
+    """One fake driver round: ``rows`` maps name -> err (None = hash row)."""
+    (root / f"CORRECTNESS_r{rnd:02d}.json").write_text(
+        json.dumps({n: {"hash_match": err is None, "err": err} for n, err in rows.items()})
+    )
+
 
 def test_priority_names_all_registered():
-    qs = registry.all_queries()  # raises KeyError if a priority name is stale
+    qs = registry.all_queries()  # raises KeyError if a CHANGED_CODE name is stale
     names = list(qs)
-    assert len(registry._DRIVER_PRIORITY) == 50
-    assert names[:50] == registry._DRIVER_PRIORITY
-    assert len(set(names)) == len(names)
-
-
-def test_priority_rename_fails_loudly(monkeypatch):
-    """A rename that orphans a priority slot must raise, not silently
-    hand the driver a weaker sample."""
-    monkeypatch.setattr(
-        registry,
-        "_DRIVER_PRIORITY",
-        registry._DRIVER_PRIORITY[:-1] + ["no_such_query_xyz"],
+    slate = registry.driver_slate(
+        registry._REGISTRY, registry.driver_recency(REPO, registry._REGISTRY)
     )
+    assert len(slate) == len(set(slate)) == registry.SLATE_SIZE == 50
+    assert set(slate) <= set(registry._REGISTRY)
+    assert names[:50] == slate
+    assert names[50:] == sorted(names[50:])
+    assert len(set(names)) == len(names) == len(registry._REGISTRY)
+
+
+def test_priority_rename_fails_loudly():
+    """A rename that orphans a changed-code lead must raise, not
+    silently hand the driver a weaker sample."""
+    specs = _specs(f"q{i:02d}" for i in range(60))
     with pytest.raises(KeyError, match="no_such_query_xyz"):
-        registry.all_queries()
+        registry.driver_slate(specs, {}, changed={"q01": 3, "no_such_query_xyz": 3})
 
 
 def test_every_query_has_doc_and_callable():
@@ -35,48 +59,128 @@ def test_every_query_has_doc_and_callable():
         assert spec.doc and len(spec.doc) > 20, name
 
 
-def test_rotation_covers_whole_registry():
-    """The staged next-round priority list must not rot: every name in
-    it resolves, and active-50 + staged + already-driver-checked
-    (CORRECTNESS_r*.json) covers the whole registry — so by the end of
-    the staged rotation every query has at least one driver row. A new
-    query MUST be appended to _DRIVER_PRIORITY_NEXT when registered.
+def test_pending_leads_come_first_in_listed_order(tmp_path):
+    specs = _specs(f"q{i:02d}" for i in range(80))
+    _write_round(tmp_path, 2, {n: None for n in specs})
+    changed = {"q70": 2, "q05": 2, "q33": 2}
+    slate = registry.driver_slate(
+        specs, registry.driver_recency(str(tmp_path), specs), changed
+    )
+    assert slate[:3] == ["q70", "q05", "q33"]
+    assert len(slate) == 50 and len(set(slate)) == 50
 
-    Coverage is oracle-aware: a prior driver row recorded as
-    ``no_oracle`` (rows-only) does NOT count as coverage for a query
-    that NOW has an oracle — upgrading an oracle must re-stage the
-    query so the new SQL earns a real hash row (the
-    similarity_ivf_kmeans lesson from round 5)."""
-    import json
-    import os
+
+def test_expired_lead_does_not_lead(tmp_path):
+    """A lead stops leading once a driver row from a LATER round than
+    its code change exists; it then competes on recency like any other
+    query."""
+    specs = _specs(f"q{i:02d}" for i in range(80))
+    _write_round(tmp_path, 1, {n: None for n in specs})
+    _write_round(tmp_path, 4, {"q70": None, "q71": None})
+    changed = {"q70": 3, "q71": 4, "q72": 3}
+    slate = registry.driver_slate(
+        specs, registry.driver_recency(str(tmp_path), specs), changed
+    )
+    assert slate[:2] == ["q71", "q72"]  # q71's r4 row is not LATER than r4
+    assert "q70" not in slate  # freshest query, and no longer a lead
+
+
+def test_tail_is_stalest_cohort_by_name(tmp_path):
+    specs = _specs(f"q{i:03d}" for i in range(120))
+    names = sorted(specs)
+    # interleave three recency cohorts so name order and recency disagree
+    _write_round(tmp_path, 3, {n: None for n in names[0::3]})
+    _write_round(tmp_path, 5, {n: None for n in names[1::3]})
+    _write_round(tmp_path, 7, {n: None for n in names[2::3] + names[0::3]})
+    rec = registry.driver_recency(str(tmp_path), specs)
+    slate = registry.driver_slate(specs, rec, changed={})
+    key = {n: (rec.get(n, 0), n) for n in specs}
+    assert slate == sorted(specs, key=key.get)[:50]
+    worst_kept = max(key[n] for n in slate)
+    assert all(key[n] > worst_kept for n in specs if n not in slate)
+    assert {rec[n] for n in slate} == {5, 7}  # the r3 rows were superseded by r7
+
+
+def test_rotation_covers_whole_registry(tmp_path):
+    """Every query reaches a driver row: a never-checked query takes a
+    slot ahead of every checked one, and the committed registry has no
+    query that is neither checked nor on the slate."""
+    specs = _specs([f"q{i:02d}" for i in range(80)] + ["zz_new"])
+    _write_round(tmp_path, 1, {n: None for n in specs if n != "zz_new"})
+    slate = registry.driver_slate(
+        specs, registry.driver_recency(str(tmp_path), specs), changed={}
+    )
+    assert slate[0] == "zz_new"
 
     qs = registry.all_queries()
-    missing = [n for n in registry._DRIVER_PRIORITY_NEXT if n not in qs]
-    assert missing == []
-    hash_checked: set[str] = set()
-    rows_only_checked: set[str] = set()
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    for f in sorted(os.listdir(root)):
-        if f.startswith("CORRECTNESS_r") and f.endswith(".json"):
-            with open(os.path.join(root, f)) as fh:
-                for name, row in json.load(fh).items():
-                    if row.get("err") == "no_oracle":
-                        rows_only_checked.add(name)
-                    else:
-                        hash_checked.add(name)
-    staged = set(registry._DRIVER_PRIORITY) | set(
-        registry._DRIVER_PRIORITY_NEXT
+    rec = registry.driver_recency(REPO, qs)
+    slate = list(qs)[: registry.SLATE_SIZE]
+    assert [n for n in qs if n not in rec and n not in slate] == []
+
+
+def test_no_oracle_row_does_not_count_once_oracle_exists(tmp_path):
+    """A rows-only (``no_oracle``) driver row is recency only while the
+    query still has no oracle; once an oracle exists its SQL needs a
+    hash row (the similarity_ivf_kmeans lesson from round 5)."""
+    specs = _specs(f"q{i:02d}" for i in range(80))
+    specs.update(_specs(["rows_only"], oracle=None))
+    specs.update(_specs(["upgraded"]))
+    _write_round(tmp_path, 2, {n: None for n in specs if n not in {"upgraded"}})
+    _write_round(tmp_path, 6, {"rows_only": "no_oracle", "upgraded": "no_oracle"})
+    _write_round(tmp_path, 7, {"unregistered_old_name": None})
+    rec = registry.driver_recency(str(tmp_path), specs)
+    assert rec["rows_only"] == 6
+    assert "upgraded" not in rec
+    assert "unregistered_old_name" not in rec
+    slate = registry.driver_slate(specs, rec, changed={})
+    assert slate[0] == "upgraded"
+    assert "rows_only" not in slate
+
+
+_DUMP_ORDER = """
+import importlib, inspect, json, re, sys
+repo, first, reverse = sys.argv[1], json.loads(sys.argv[2]), sys.argv[3] == "1"
+sys.path.insert(0, repo)
+from kinesis_analytics_demo_spark.plans import registry as R
+mods = re.findall(r"import (kinesis_analytics_demo_spark[.\\w]+)",
+                  inspect.getsource(R._load_all_modules))
+for m in first + (mods[::-1] if reverse else mods):
+    importlib.import_module(m)
+qs = R.all_queries()
+print(json.dumps({"registered": list(R._REGISTRY), "order": list(qs),
+                  "oracles": {n: s.oracle for n, s in qs.items()}}))
+"""
+
+
+def _dump_in_fresh_process(first: list[str], reverse: bool) -> dict:
+    out = subprocess.run(
+        [sys.executable, "-c", _DUMP_ORDER, REPO, json.dumps(first), str(int(reverse))],
+        capture_output=True,
+        text=True,
+        cwd=REPO,
     )
-    uncovered = []
-    for name, spec in qs.items():
-        if name in staged or name in hash_checked:
-            continue
-        # rows-only driver row suffices only while the query still has
-        # no oracle; once an oracle exists it needs a hash row.
-        if spec.oracle is None and name in rows_only_checked:
-            continue
-        uncovered.append(name)
-    assert sorted(uncovered) == [], sorted(uncovered)
+    assert out.returncode == 0, out.stderr[-2000:]
+    return json.loads(out.stdout)
+
+
+def test_all_queries_order_free_of_import_order():
+    """Two fresh interpreters import the registering modules in
+    different orders (dedup_embedding before dedup, then the
+    ``_load_all_modules`` list reversed). Registration order differs;
+    ``all_queries()`` order and every oracle must not. Registration
+    starts no JVM."""
+    base = _dump_in_fresh_process([], reverse=False)
+    flipped = _dump_in_fresh_process(
+        [
+            "kinesis_analytics_demo_spark.plans.reference_queries2",
+            "kinesis_analytics_demo_spark.operators.dedup_embedding",
+        ],
+        reverse=True,
+    )
+    assert base["registered"] != flipped["registered"]  # the orders really differ
+    assert flipped["order"] == base["order"]
+    assert flipped["oracles"] == base["oracles"]
+    assert len(base["order"]) == 302
 
 
 def test_module_line_cap():

@@ -221,3 +221,19 @@ def test_rrf_pool_excludes_termless_docs(spark, tmp_path):
     assert len(got) == 3
     for r in out:
         assert r.rrf_score > 0.0
+
+
+def test_duplicate_query_terms_raise_value_error():
+    """The duplicate-term guard is a real check, not an ``assert`` that
+    ``python -O`` strips: a repeated term raises ValueError, and the
+    shipped terms pass."""
+    import pytest
+
+    from kinesis_analytics_demo_spark.operators.retrieval import (
+        BM25_QUERY_TERMS,
+        check_distinct_terms,
+    )
+
+    check_distinct_terms(BM25_QUERY_TERMS)
+    with pytest.raises(ValueError, match="duplicate-free"):
+        check_distinct_terms(("hash", "scan", "hash"))

@@ -688,8 +688,7 @@ def test_running_candlestick_stateful(spark, tmp_path):
     """Custom stateful running candlestick (applyInPandasWithState):
     cumulative per-key OHLC across micro-batches; the last emission
     per key must equal the batch min_by/max_by/min/max aggregate over
-    all replayed files. (The transformWithStateInPandas variant needs
-    protobuf — see test_state_v2_gated.)"""
+    all replayed files."""
     from kinesis_analytics_demo_spark.streaming.stateful import (
         running_candlestick_stateful as running_candlestick,
     )
@@ -736,25 +735,6 @@ def test_running_candlestick_stateful(spark, tmp_path):
             g.max_value,
             g.n_events,
         ) == (e.first_value, e.last_value, e.min_value, e.max_value, e.n_events), k
-
-
-def test_state_v2_gated(spark):
-    """state API v2 (transformWithStateInPandas) needs protobuf for
-    its python<->JVM state-server protocol; without it the operator
-    must refuse cleanly instead of crashing the streaming query."""
-    from kinesis_analytics_demo_spark.streaming import state_v2
-
-    if state_v2.state_v2_available():
-        pytest.skip("protobuf present - covered by the real run")
-    import pyspark.sql.functions as F
-
-    df = spark.readStream.format("rate").load().select(
-        F.lit("k").alias("ticker"),
-        F.col("timestamp").alias("utc"),
-        F.col("value").cast("double").alias("price"),
-    )
-    with pytest.raises(RuntimeError, match="protobuf"):
-        state_v2.running_candlestick(df)
 
 
 def test_streaming_corpus_prep(spark, tmp_path):
